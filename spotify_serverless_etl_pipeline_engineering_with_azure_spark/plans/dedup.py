@@ -451,7 +451,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy(doc_id) reuses (guide §2.4), so the packed aggregation
     runs as a single in-stage pass with no second shuffle — measured
     0.88 → 0.46 s median at sf0.1 and 1.10 → 0.74 s at sf1, beyond
-    spread, results bit-identical (scripts/measure_simhash_ab.py).
+    spread, results bit-identical (SIMHASH_AB_r11.json).
 
     Capacity: each 16-bit field holds a popcount ≤ 65535 and the packed
     sum stays below 2^63 for ≤ 32767 tokens per document — far above
@@ -461,15 +461,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     SUM(±1)); shiftright/`% 2` extraction is exact on the non-negative
     48-bit hash, matching the oracle's `(h // 2^j) % 2`.
     """
-    return _simhash_plan(spark, sf_dir)
-
-
-def _simhash_plan(
-    spark: SparkSession, sf_dir: str, keyed_scatter: bool = True
-) -> DataFrame:
-    """dedup_simhash's plan with the parallelism-repair shuffle's
-    keying exposed for measured A/Bs (``keyed_scatter=False`` is the
-    pre-r11 round-robin shape, kept as the comparator)."""
     docs = table(spark, sf_dir, "documents")
     # Cap the aggregation's input at MAX+1 tokens per doc BEFORE any
     # hashing: bounds the packed SUM away from int64 overflow regardless
@@ -485,9 +476,8 @@ def _simhash_plan(
     # + one Complete-mode agg (guide §2.4), and the keyed repartition
     # skips round-robin's sortBeforeRepartition pass. doc_id is unique,
     # so hash balance matches round-robin's.
-    src = scatter_by(docs, "doc_id") if keyed_scatter else scatter(docs)
     tok = (
-        src
+        scatter_by(docs, "doc_id")
         .select("doc_id", F.posexplode(F.split("text", " ")).alias("pos", "t"))
         .filter(F.col("pos") <= SIMHASH_MAX_TOKENS)
     )
@@ -1773,28 +1763,27 @@ def _pfj_index(
     )
 
 
-def _pfj_intersect_batches(batches, threshold: float | None = None):
+def _pfj_intersect_batches(batches, threshold: float):
     """Arrow-batched exact intersection counts for the prefix-filter
     join's verification: per input row (doc_a, doc_b, sa, sb) with sa
     and sb SORTED, UNIQUE int64 arrays (the _pfj_index contract —
     sort_array(collect_set(shid))), emit (doc_a, doc_b, n_common, ma,
     mb) with n_common = |sa ∩ sb| counted by a fully-vectorized numpy
     binary-search merge instead of JVM array_intersect's per-row boxed
-    hash set.
+    hash set, for the rows whose jaccard passes ``threshold``.
 
-    FUSED THRESHOLD (r11, guide §4.2 — shrink the boundary): with
-    ``threshold`` set, only rows whose jaccard passes it are emitted,
-    so failing candidates never cross the Arrow IPC boundary back to
-    the JVM. At sf10 the join stage shipped every candidate's
-    (doc_a, doc_b, n_common, ma, mb) back even though only the
-    result-rate fraction survives the downstream filter. The predicate
+    FUSED THRESHOLD (r11, guide §4.2 — shrink the boundary): only
+    passing rows are emitted, so failing candidates never cross the
+    Arrow IPC boundary back to the JVM. Unfused, the sf10 join stage
+    shipped every candidate's (doc_a, doc_b, n_common, ma, mb) back
+    although only the result-rate fraction passes. The predicate
     is computed EXACTLY as the SQL tail computes it —
     ``float64(n_common) / float64(ma + mb − n_common) >= t`` — numpy
     float64 division is the same IEEE-754 double division the JVM
     performs on ``CAST(n_common AS DOUBLE) / n_union``, so fusing
-    moves the filter without moving any rounding boundary (the pinned
-    arm-equality test compares the fused arm row-for-row against the
-    JVM arm, which keeps the external filter). n_union >= 1 always:
+    moves the filter without moving any rounding boundary (a pinned
+    test recomputes every production row's n_common, n_union and
+    jaccard with JVM array_intersect). n_union >= 1 always:
     inner joins over non-empty profile arrays give ma, mb >= 1 and
     n_common <= min(ma, mb).
 
@@ -1807,8 +1796,8 @@ def _pfj_intersect_batches(batches, threshold: float | None = None):
     batch's packed b-keys — the same batched sorted-merge the numpy
     mirror uses. The rows never leave the join's stage: mapInArrow
     pipelines inside it (no exchange), so the plan's shuffle shape is
-    IDENTICAL to the JVM variant and the only new cost is the Arrow
-    IPC hop, linear in candidate bytes.
+    IDENTICAL to the pre-r10 JVM array_intersect plan and the only new
+    cost is the Arrow IPC hop, linear in candidate bytes.
 
     Mechanics: flatten both list columns; pack each element into one
     monotone int64 key `row_id * span + (value - lo)` (rows are
@@ -1819,9 +1808,9 @@ def _pfj_intersect_batches(batches, threshold: float | None = None):
     monotonically_increasing_id — partition id in the high bits, so
     span is usually ~2^38 but unbounded in principle), fall back to a
     batch-local np.unique remap, which is exact for any id range.
-    Intersection SIZES are what both arms return, so the kernel is
-    bit-equivalent to array_intersect semantics on unique arrays (a
-    pinned test compares the two arms row-for-row)."""
+    Only intersection SIZES are returned, so the kernel is
+    bit-equivalent to array_intersect semantics on unique arrays (the
+    pinned JVM recomputation above checks it row-for-row)."""
     import numpy as np
     import pyarrow as pa
 
@@ -1872,15 +1861,14 @@ def _pfj_intersect_batches(batches, threshold: float | None = None):
         else:
             counts = np.zeros(n, dtype=np.int64)
         doc_a, doc_b = batch.column("doc_a"), batch.column("doc_b")
-        if threshold is not None:
-            keep = counts.astype(np.float64) / (la + lb - counts) >= threshold
-            if not keep.all():
-                if not keep.any():
-                    continue
-                keep_idx = np.flatnonzero(keep)
-                take = pa.array(keep_idx, type=pa.int64())
-                doc_a, doc_b = doc_a.take(take), doc_b.take(take)
-                counts, la, lb = counts[keep_idx], la[keep_idx], lb[keep_idx]
+        keep = counts.astype(np.float64) / (la + lb - counts) >= threshold
+        if not keep.all():
+            if not keep.any():
+                continue
+            keep_idx = np.flatnonzero(keep)
+            take = pa.array(keep_idx, type=pa.int64())
+            doc_a, doc_b = doc_a.take(take), doc_b.take(take)
+            counts, la, lb = counts[keep_idx], la[keep_idx], lb[keep_idx]
         yield pa.record_batch(
             [
                 doc_a,
@@ -1894,172 +1882,11 @@ def _pfj_intersect_batches(batches, threshold: float | None = None):
 
 
 def _pfj_intersect_passing(batches):
-    """mapInArrow entry point for the production arrow arm: the
+    """mapInArrow entry point for dedup_prefix_filter_jaccard: the
     intersection kernel with the member's jaccard threshold fused in
     (importable module-level function, not a lambda/partial, so reused
     Python workers can resolve it by reference)."""
     return _pfj_intersect_batches(batches, threshold=PF_JACCARD_T)
-
-
-def _pfj_plan(spark: SparkSession, sf_dir: str, verify: str = "arrow") -> DataFrame:
-    """The prefix-filter Jaccard plan behind dedup_prefix_filter_jaccard,
-    with the verification backend exposed for measured A/Bs:
-
-    - ``arrow`` (production): the join projects (doc_a, doc_b, sa, sb)
-      into ``_pfj_intersect_passing`` via mapInArrow — vectorized
-      sorted-merge counting with the jaccard threshold FUSED into the
-      kernel (only passing rows cross the IPC boundary back; the
-      jvm/hof arms apply the identical predicate externally), pipelined
-      inside the join's stage.
-    - ``arrow_unfused``: the r10 production shape — same kernel but
-      every counted candidate returns across the IPC boundary and the
-      threshold runs as a Catalyst Filter. Kept live so the fusion's
-      cost delta stays reproducible within one session.
-    - ``jvm``: size(array_intersect(sa, sb)) in the join's projection —
-      the pre-r10 shape, kept as the A/B comparator and the
-      arm-equality test's second opinion.
-    - ``hof``: size(filter(sa, x -> array_contains(sb, x))) — the
-      verdict-suggested higher-order-function arm; O(|sa|·|sb|) linear
-      scans per row (array_contains per element), measured for the
-      record.
-
-    All three arms share the identical candidate join (same shuffles,
-    same exactness filters) and the identical SQL tail modulo WHERE the
-    jaccard filter runs (inside the kernel for arrow, a Catalyst Filter
-    for jvm/hof), so an A/B isolates verification + boundary cost."""
-    # vocab (frozen shingle ids + df counts), the prefix probe frame,
-    # and the ride-along profile arrays come from the cached id-keyed
-    # index — see _pfj_index for why the id assignment must be frozen
-    # and shared atomically between the prefix stream and the arrays,
-    # and why the prefix frame is eager there (its two join-side
-    # consumers raced a lazy checkpoint into double evaluation).
-    # Candidates stream from a SELF-JOIN of the prefix frame — NOT a
-    # collect_list bucket expansion: prefix buckets have no width cap
-    # (capping would break the no-false-negatives guarantee; a cluster
-    # of k near-identical docs makes every prefix shingle df≈k), so an
-    # array-expansion bucket of k members would materialize k²/2
-    # structs in one row and hit the JVM 2³¹-element limit at
-    # web-scale boilerplate.
-    _vocab, prefix, profiles = _pfj_index(spark, sf_dir)
-    # Each doc's SORTED SHINGLE-SET ARRAY rides the prefix entries INTO
-    # the pair-generating self-join — the _cell_pair_cosines lesson
-    # (payloads ride the join that creates pairs; the pair stream is
-    # never exchanged). Two rejected shapes, both measured:
-    # (a) token-level verification (cand ⋈ toks_a on doc_a ⋈ toks_b on
-    #     (doc_b, sh) + groupBy) shuffles Σ_cand |S_a| token rows —
-    #     370M intermediate rows at sf1, ~37e9 rows / ~1.8 TB at sf10;
-    # (b) pair-level array attach (distinct cand, then two profile
-    #     joins) halves that but must route the 700M-pair stream WITH
-    #     a ~1.3 KB array through the second attach's shuffle once the
-    #     profile side outgrows broadcast — ~500 GB at sf10, the run
-    #     that killed this host's disk.
-    # Riding the arrays makes every shuffle corpus-linear: the prefix
-    # side costs prefix-entries × array width (id-keyed: 8 B/element
-    # instead of the shingle string), the emission stream is filtered
-    # and intersected MAP-SIDE inside the join's stage (JVM projection
-    # or pipelined mapInArrow — no exchange either way), and the only
-    # pair-level exchange is the final distinct over rows that already
-    # passed jaccard >= t — RESULT-sized (each true pair × its passing
-    # prefix shingles, all copies bit-identical since the row is a
-    # pure function of the pair). The ~k× redundant intersections for
-    # a pair sharing k prefix shingles are the documented price —
-    # row-local vectorized work that scales with cores, traded against
-    # the pair-stream shuffle that does not scale with disk; the r9 id
-    # substitution cut the per-candidate constant 220 → 48 µs·core and
-    # the r10 Arrow kernel attacks the rest (see
-    # _pfj_intersect_batches). collect_set is PER-DOC (bounded by
-    # document token count), never a bucket expansion.
-    #
-    # Length + positional filters (see docstring): both thresholds are
-    # relaxed by 0.5 — sizes/overlaps are integers, so half-unit slack
-    # can only ADMIT extra candidates (verified exactly in the same
-    # join), never drop a true pair to t·m landing on a float rounding
-    # boundary. They sit in the JOIN CONDITION, so rejected emissions
-    # never reach the verification projection.
-    overlap_frac = PF_JACCARD_T / (1.0 + PF_JACCARD_T)
-    pref_a = prefix.join(profiles, "doc_id").select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("i").alias("ia"),
-        F.col("m").alias("ma"),
-        "shid",
-        F.col("shs").alias("sa"),
-    )
-    pref_b = prefix.join(profiles, "doc_id").select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("i").alias("ib"),
-        F.col("m").alias("mb"),
-        F.col("shid").alias("shid_b"),
-        F.col("shs").alias("sb"),
-    )
-    cand = pref_a.join(
-        pref_b,
-        (F.col("shid") == F.col("shid_b"))
-        & (F.col("doc_a") < F.col("doc_b"))
-        & (
-            F.least("ma", "mb")
-            >= PF_JACCARD_T * F.greatest("ma", "mb") - F.lit(0.5)
-        )
-        & (
-            1 + F.least(F.col("ma") - F.col("ia"), F.col("mb") - F.col("ib"))
-            >= overlap_frac * (F.col("ma") + F.col("mb")) - F.lit(0.5)
-        ),
-    )
-    if verify == "arrow":
-        # The jaccard threshold is FUSED into the kernel (r11): failing
-        # candidates are dropped batch-locally before the Arrow IPC
-        # return hop, so the boundary carries only result-rate rows.
-        # The kernel applies the bit-identical double-division predicate
-        # the other arms apply externally below.
-        counted = cand.select("doc_a", "doc_b", "sa", "sb").mapInArrow(
-            _pfj_intersect_passing,
-            "doc_a long, doc_b long, n_common long, ma long, mb long",
-        )
-    elif verify == "arrow_unfused":
-        counted = cand.select("doc_a", "doc_b", "sa", "sb").mapInArrow(
-            _pfj_intersect_batches,
-            "doc_a long, doc_b long, n_common long, ma long, mb long",
-        )
-    elif verify == "hof":
-        counted = cand.select(
-            "doc_a",
-            "doc_b",
-            F.size(
-                F.filter("sa", lambda x: F.array_contains("sb", x))
-            ).cast("long").alias("n_common"),
-            F.size("sa").cast("long").alias("ma"),
-            F.size("sb").cast("long").alias("mb"),
-        )
-    else:  # "jvm"
-        counted = cand.select(
-            "doc_a",
-            "doc_b",
-            # cast: size() is INT; the member's pinned schema (and the
-            # oracle's COUNT/SUM arithmetic) is BIGINT
-            F.size(F.array_intersect("sa", "sb")).cast("long").alias("n_common"),
-            F.size("sa").cast("long").alias("ma"),
-            F.size("sb").cast("long").alias("mb"),
-        )
-    emitted = counted.withColumn(
-        "n_union", F.col("ma") + F.col("mb") - F.col("n_common")
-    )
-    if verify != "arrow":
-        # jvm/hof arms count every candidate, so they filter here; the
-        # arrow kernel already emitted only passing rows (same
-        # predicate, same float64 arithmetic — see
-        # _pfj_intersect_batches).
-        emitted = emitted.filter(
-            F.col("n_common").cast("double") / F.col("n_union") >= PF_JACCARD_T
-        )
-    return (
-        emitted
-        .withColumn(
-            "jaccard",
-            F.round(F.col("n_common").cast("double") / F.col("n_union") * 1000000.0)
-            / 1000000.0,
-        )
-        .select("doc_a", "doc_b", "n_common", "n_union", "jaccard")
-        .distinct()
-    )
 
 
 @register(
@@ -2124,10 +1951,12 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage — since r10 via the Arrow-batched vectorized sorted-merge
     kernel (_pfj_intersect_batches, pipelined mapInArrow: no new
     exchange, measured A/B in PFJ_AB_r10.json) rather than JVM
-    array_intersect's per-row hash set — see _pfj_plan for the two
-    rejected shapes, the three measured verification arms, and why
-    every shuffle here is corpus-linear. Integer-over-integer division
-    makes the threshold decision engine-exact.
+    array_intersect's per-row hash set — see the plan comments below
+    for the two rejected shapes and why every shuffle here is
+    corpus-linear; the kernel's measured comparators (JVM
+    array_intersect, the unfused kernel, a higher-order-function scan)
+    are in PFJ_AB_r10.json and PFJ_AB_r11_*. Integer-over-integer
+    division makes the threshold decision engine-exact.
 
     Honest quadratic contract: a cluster of k docs that genuinely ARE
     mutually near-identical (templated boilerplate differing by a
@@ -2159,4 +1988,87 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     in one row and hit the JVM 2³¹-element limit on web-scale
     boilerplate, while the join emits the same pairs as a stream.
     """
-    return _pfj_plan(spark, sf_dir, verify="arrow")
+    _vocab, prefix, profiles = _pfj_index(spark, sf_dir)
+    # Each doc's SORTED SHINGLE-SET ARRAY rides the prefix entries INTO
+    # the pair-generating self-join — the _cell_pair_cosines lesson
+    # (payloads ride the join that creates pairs; the pair stream is
+    # never exchanged). Two rejected shapes, both measured:
+    # (a) token-level verification (cand ⋈ toks_a on doc_a ⋈ toks_b on
+    #     (doc_b, sh) + groupBy) shuffles Σ_cand |S_a| token rows —
+    #     370M intermediate rows at sf1, ~37e9 rows / ~1.8 TB at sf10;
+    # (b) pair-level array attach (distinct cand, then two profile
+    #     joins) halves that but must route the 700M-pair stream WITH
+    #     a ~1.3 KB array through the second attach's shuffle once the
+    #     profile side outgrows broadcast — ~500 GB at sf10, the run
+    #     that killed this host's disk.
+    # Riding the arrays makes every shuffle corpus-linear: the prefix
+    # side costs prefix-entries × array width (id-keyed: 8 B/element
+    # instead of the shingle string), the emission stream is filtered
+    # and intersected MAP-SIDE inside the join's stage (pipelined
+    # mapInArrow — no exchange), and the only
+    # pair-level exchange is the final distinct over rows that already
+    # passed jaccard >= t — RESULT-sized (each true pair × its passing
+    # prefix shingles, all copies bit-identical since the row is a
+    # pure function of the pair). The ~k× redundant intersections for
+    # a pair sharing k prefix shingles are the documented price —
+    # row-local vectorized work that scales with cores, traded against
+    # the pair-stream shuffle that does not scale with disk; the r9 id
+    # substitution cut the per-candidate constant 220 → 48 µs·core and
+    # the r10 Arrow kernel attacks the rest (see
+    # _pfj_intersect_batches). collect_set is PER-DOC (bounded by
+    # document token count), never a bucket expansion.
+    #
+    # Length + positional filters (see docstring): both thresholds are
+    # relaxed by 0.5 — sizes/overlaps are integers, so half-unit slack
+    # can only ADMIT extra candidates (verified exactly in the same
+    # join), never drop a true pair to t·m landing on a float rounding
+    # boundary. They sit in the JOIN CONDITION, so rejected emissions
+    # never reach the verification projection.
+    overlap_frac = PF_JACCARD_T / (1.0 + PF_JACCARD_T)
+    pref_a = prefix.join(profiles, "doc_id").select(
+        F.col("doc_id").alias("doc_a"),
+        F.col("i").alias("ia"),
+        F.col("m").alias("ma"),
+        "shid",
+        F.col("shs").alias("sa"),
+    )
+    pref_b = prefix.join(profiles, "doc_id").select(
+        F.col("doc_id").alias("doc_b"),
+        F.col("i").alias("ib"),
+        F.col("m").alias("mb"),
+        F.col("shid").alias("shid_b"),
+        F.col("shs").alias("sb"),
+    )
+    cand = pref_a.join(
+        pref_b,
+        (F.col("shid") == F.col("shid_b"))
+        & (F.col("doc_a") < F.col("doc_b"))
+        & (
+            F.least("ma", "mb")
+            >= PF_JACCARD_T * F.greatest("ma", "mb") - F.lit(0.5)
+        )
+        & (
+            1 + F.least(F.col("ma") - F.col("ia"), F.col("mb") - F.col("ib"))
+            >= overlap_frac * (F.col("ma") + F.col("mb")) - F.lit(0.5)
+        ),
+    )
+    # The jaccard threshold is FUSED into the kernel (r11): failing
+    # candidates are dropped batch-locally before the Arrow IPC return
+    # hop, so the boundary carries only result-rate rows (same
+    # double-division predicate as the oracle's WHERE — see
+    # _pfj_intersect_batches).
+    return (
+        cand.select("doc_a", "doc_b", "sa", "sb")
+        .mapInArrow(
+            _pfj_intersect_passing,
+            "doc_a long, doc_b long, n_common long, ma long, mb long",
+        )
+        .withColumn("n_union", F.col("ma") + F.col("mb") - F.col("n_common"))
+        .withColumn(
+            "jaccard",
+            F.round(F.col("n_common").cast("double") / F.col("n_union") * 1000000.0)
+            / 1000000.0,
+        )
+        .select("doc_a", "doc_b", "n_common", "n_union", "jaccard")
+        .distinct()
+    )

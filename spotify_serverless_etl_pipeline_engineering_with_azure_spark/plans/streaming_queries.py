@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..streaming.pipeline import (
+    await_drain,
     events_stream,
     narrow_state_partitions,
     run_to_memory,
@@ -299,36 +300,15 @@ def streaming_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch id — the reference's swallowed-error copy+delete replaced by
     checkpoint + deterministic paths, spotifytransform.py:101-158).
     Reading the landed files back and aggregating must equal
-    aggregating the source directly."""
-    from ..catalog import sink_run_dir
-
-    # Run-unique, app-scoped, swept (sink_run_dir's contract): the old
-    # fixed per-dataset dir was rmtree'd on every build — destroying
-    # the files backing any previously returned frame — and its
-    # uuid-named checkpoint dirs leaked outside every swept root. The
-    # checkpoint now lives inside the run dir.
-    out = sink_run_dir(spark, "feb", sf_dir)
-
-    def sink(batch_df, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{out}/data/batch_id={batch_id}")
-
-    with narrow_state_partitions(spark):
-        q = (
-            events_stream(spark, sf_dir)
-            .select("event_id", "event_type", "value")
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", f"{out}/_ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError("foreachBatch stream did not drain")
+    aggregating the source directly. The drain is run_to_parquet's:
+    a run-unique, app-scoped, swept run dir with the checkpoint inside
+    it."""
     from ..functions.exact import dsum
 
-    back = spark.read.option("basePath", f"{out}/data").parquet(
-        f"{out}/data/batch_id=*"
+    back, _ = run_to_parquet(
+        events_stream(spark, sf_dir).select("event_id", "event_type", "value"),
+        "feb",
+        sf_dir,
     )
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"), dsum(F.col("value"), 2).alias("sum_value")
@@ -419,10 +399,7 @@ def streaming_csv_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError("csv sink stream did not drain")
+    await_drain(q, "csv sink")
 
     def read_back(name: str, value_field: str) -> DataFrame:
         df = (

@@ -549,7 +549,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (doc_id, term) exchange disappears; and when the df join
     # broadcasts, the persisted tf's partitioning survives to the
     # per-doc top-k window, which then skips ITS exchange too
-    # (measured 5 → 3 Exchanges, see OPTIMIZATION_r11.md).
+    # (measured 5 → 4 Exchanges, see OPTIMIZATION_r11.md).
     tok = scatter_by(docs, "doc_id").select(
         "doc_id", F.explode(_tokens()).alias("term")
     )

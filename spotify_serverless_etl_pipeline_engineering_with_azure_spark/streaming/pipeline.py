@@ -196,6 +196,17 @@ def narrow_state_partitions(spark: SparkSession):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
+def await_drain(q: StreamingQuery, name: str, timeout_s: int = 300) -> StreamingQuery:
+    """Block until an availableNow query drains. A query still active
+    after ``timeout_s`` is stopped (never left running in the session)
+    and raises TimeoutError."""
+    q.awaitTermination(timeout_s)
+    if q.isActive:
+        q.stop()
+        raise TimeoutError(f"stream {name} did not drain in {timeout_s}s")
+    return q
+
+
 def run_to_memory(
     df: DataFrame, name: str, *, output_mode: str = "complete", timeout_s: int = 300
 ):
@@ -211,11 +222,7 @@ def run_to_memory(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(timeout_s)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError(f"stream {name} did not drain in {timeout_s}s")
-        return q
+        return await_drain(q, name, timeout_s)
 
 
 def run_to_parquet(
@@ -276,10 +283,7 @@ def run_to_parquet(
             .trigger(availableNow=True)
             .start()
         )
-    q.awaitTermination(timeout_s)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError(f"stream {prefix} did not drain in {timeout_s}s")
+    await_drain(q, prefix, timeout_s)
     if not glob.glob(f"{run}/data/batch_id=*"):
         # Zero DATA batches (an empty bounded source never invokes
         # foreachBatch) → the glob target was never created, and

@@ -244,29 +244,49 @@ WHERE CAST(c AS DOUBLE) / (sa.m + sb.m - c) >= {PF_JACCARD_T}
     assert got == {(a, b) for a, b in brute}
 
 
-def test_prefix_filter_verification_arms_are_bit_identical(spark, sf_dir):
-    """The verification backends behind _pfj_plan — the fused-threshold
-    Arrow kernel (production), the r10 unfused Arrow shape, JVM
-    array_intersect (the pre-r10 shape), and the HOF linear-scan arm —
-    share one candidate join and must emit row-for-row identical
-    results: the kernel substitutes only HOW |sa ∩ sb| is counted and
-    WHERE the threshold runs, never which pairs exist or what their
-    sizes are."""
+def test_prefix_filter_rows_match_jvm_array_intersect(spark, sf_dir):
+    """Every production row of dedup_prefix_filter_jaccard — counted by
+    the fused Arrow kernel — must equal an independent JVM
+    recomputation: attach both docs' id arrays from _pfj_index's
+    profiles and recount n_common with size(array_intersect), then
+    n_union and the rounded jaccard. Pair completeness is covered by
+    test_prefix_filter_jaccard_is_complete and oracle parity."""
+    from pyspark.sql import functions as F
+
     from spotify_serverless_etl_pipeline_engineering_with_azure_spark.plans.dedup import (
-        _pfj_plan,
+        _pfj_index,
+        dedup_prefix_filter_jaccard,
     )
 
-    frames = {
-        arm: _pfj_plan(spark, sf_dir, verify=arm)
-        .toPandas()
-        .sort_values(["doc_a", "doc_b"])
-        .reset_index(drop=True)
-        for arm in ("arrow", "arrow_unfused", "jvm", "hof")
-    }
-    assert len(frames["arrow"]) > 0, "fixture produced no near-dup pairs"
-    assert frames["arrow"].equals(frames["arrow_unfused"])
-    assert frames["arrow"].equals(frames["jvm"])
-    assert frames["arrow"].equals(frames["hof"])
+    _vocab, _prefix, profiles = _pfj_index(spark, sf_dir)
+    rows = dedup_prefix_filter_jaccard(spark, sf_dir)
+    n_common = F.size(F.array_intersect("sa", "sb")).cast("long")
+    n_union = F.size("sa") + F.size("sb") - n_common
+
+    def side(doc, arr):
+        return profiles.select(F.col("doc_id").alias(doc), F.col("shs").alias(arr))
+
+    jvm = (
+        rows.select("doc_a", "doc_b")
+        .join(side("doc_a", "sa"), "doc_a")
+        .join(side("doc_b", "sb"), "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            n_common.alias("n_common"),
+            n_union.cast("long").alias("n_union"),
+            (
+                F.round(n_common.cast("double") / n_union * 1000000.0) / 1000000.0
+            ).alias("jaccard"),
+        )
+    )
+
+    def ordered(df):
+        return df.toPandas().sort_values(["doc_a", "doc_b"]).reset_index(drop=True)
+
+    got, want = ordered(rows), ordered(jvm)
+    assert len(got) > 0, "fixture produced no near-dup pairs"
+    assert got.equals(want)
 
 
 def test_pfj_intersect_kernel_packing_and_fallback_paths():
@@ -291,7 +311,7 @@ def test_pfj_intersect_kernel_packing_and_fallback_paths():
                 "sb": pa.array(sb_rows, type=pa.list_(pa.int64())),
             }
         )
-        out = list(_pfj_intersect_batches(iter([batch])))
+        out = list(_pfj_intersect_batches(iter([batch]), threshold=0.0))
         assert len(out) == 1
         return out[0].to_pydict()
 
@@ -321,14 +341,14 @@ def test_pfj_intersect_kernel_packing_and_fallback_paths():
             "sb": pa.array([], type=pa.list_(pa.int64())),
         }
     )
-    assert list(_pfj_intersect_batches(iter([empty]))) == []
+    assert list(_pfj_intersect_batches(iter([empty]), threshold=0.0)) == []
 
 
 def test_pfj_kernel_fused_threshold_filters_before_ipc():
     """The r11 fused jaccard threshold must drop failing candidates
     INSIDE the kernel (so they never cross the Arrow boundary) using
-    the exact double-division predicate the jvm/hof arms apply
-    externally — including the boundary case where n_common/n_union
+    the exact double-division predicate the oracle applies in SQL —
+    including the boundary case where n_common/n_union
     lands exactly on the threshold (>=, so it passes)."""
     import pyarrow as pa
 
@@ -355,7 +375,7 @@ def test_pfj_kernel_fused_threshold_filters_before_ipc():
     # 0 common (fail)
     b = batch(
         [[1, 2, 3], [1, 2], [1, 2, 3, 4], [7]],
-        [[1, 2, 3], [2, 3], [1, 2, 3], [8]],
+        [[1, 2, 3], [2, 3], [1, 2, 3, 9], [8]],
     )
     assert PF_JACCARD_T == 0.6, "boundary row below assumes t=0.6"
     out = list(_pfj_intersect_batches(iter([b]), threshold=PF_JACCARD_T))
@@ -364,7 +384,7 @@ def test_pfj_kernel_fused_threshold_filters_before_ipc():
     assert got["doc_a"] == [0, 2]
     assert got["doc_b"] == [100, 102]
     assert got["n_common"] == [3, 3]
-    assert got["ma"] == [3, 4] and got["mb"] == [3, 3]
+    assert got["ma"] == [3, 4] and got["mb"] == [3, 4]
 
     # production entry point behaves identically
     got2 = list(_pfj_intersect_passing(iter([batch([[1, 2, 3]], [[1, 2, 3]])])))
@@ -375,11 +395,6 @@ def test_pfj_kernel_fused_threshold_filters_before_ipc():
         list(_pfj_intersect_batches(iter([batch([[1]], [[2]])]), threshold=0.5))
         == []
     )
-
-    # threshold=None keeps every row — the direct-count contract the
-    # packing/fallback test above relies on
-    all_rows = list(_pfj_intersect_batches(iter([b])))
-    assert all_rows[0].num_rows == 4
 
 
 def test_index_caches_reuse_and_invalidate(spark, sf_dir, tmp_path):

@@ -304,14 +304,28 @@ WINDOW_GROUP_LIMIT_QUERIES = (
 )
 
 
-@pytest.mark.parametrize("name", WINDOW_GROUP_LIMIT_QUERIES)
-def test_rank_limit_window_keeps_partial_group_limit(spark, name):
-    df = registry.queries()[name](spark, SF_SMOKE)
+# A Window fed (through an optional Final group limit and Sort) by a
+# shuffle. "simple" explain prints the parent first, so the Exchange
+# sits BELOW the Window; leading "+- " / ":  +- " tree markers vary.
+_WINDOW_OVER_EXCHANGE = re.compile(
+    r"\+- Window \[[^\n]*\n"
+    r"(?:[ :]*\+- (?:\*\(\d+\) )?WindowGroupLimit [^\n]*\n)?"
+    r"(?:[ :]*\+- (?:\*\(\d+\) )?Sort [^\n]*\n)?"
+    r"[ :]*\+- Exchange hashpartitioning\([^\n]*, ENSURE_REQUIREMENTS"
+)
+
+
+def _simple_plan(spark, df) -> str:
     jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
-    plan = df._jdf.queryExecution().explainString(jmode)
+    return df._jdf.queryExecution().explainString(jmode)
+
+
+def _rank_limit_violation(plan: str) -> str | None:
+    """Why ``plan`` funnels a rank-limit window, or None when it is safe."""
     if re.search(r"WindowGroupLimit .*, Partial", plan):
-        assert re.search(r"WindowGroupLimit .*, Final", plan), plan
-        return
+        if not re.search(r"WindowGroupLimit .*, Final", plan):
+            return "Partial WindowGroupLimit without its Final half"
+        return None
     # No Partial group limit is ONLY safe when no exchange feeds the
     # window at all — the window reuses an upstream partitioning, so
     # the funnel the partial limit protects against does not exist
@@ -320,16 +334,37 @@ def test_rank_limit_window_keeps_partial_group_limit(spark, name):
     # re-keys by (doc_id, term), the window pays its exchange, and
     # Spark re-plans the Partial/Final split). The dangerous shape —
     # a window-feeding ENSURE_REQUIREMENTS exchange WITHOUT the
-    # partial limit — still fails.
-    assert not re.search(
-        r"Exchange hashpartitioning\([^)]*\), ENSURE_REQUIREMENTS[^\n]*\n\s*\+- Window", plan
-    ) and not re.search(
-        r"Exchange hashpartitioning\([^)]*\), ENSURE_REQUIREMENTS[^\n]*\n\s*\+- \*\(\d+\) Sort", plan
-    ), (
-        f"{name}: no map-side WindowGroupLimit(Partial) AND the window "
-        f"still pays an exchange — the rank filter no longer bounds rows "
-        f"before the shuffle:\n{plan}"
+    # partial limit — fails.
+    if _WINDOW_OVER_EXCHANGE.search(plan):
+        return (
+            "no map-side WindowGroupLimit(Partial) AND the window still "
+            "pays an exchange — the rank filter no longer bounds rows "
+            "before the shuffle"
+        )
+    return None
+
+
+@pytest.mark.parametrize("name", WINDOW_GROUP_LIMIT_QUERIES)
+def test_rank_limit_window_keeps_partial_group_limit(spark, name):
+    plan = _simple_plan(spark, registry.queries()[name](spark, SF_SMOKE))
+    problem = _rank_limit_violation(plan)
+    assert problem is None, f"{name}: {problem}:\n{plan}"
+
+
+def test_rank_limit_guard_fires_on_window_without_partial_limit(spark):
+    """Negative fixture: an unbounded sum over a partitioned window has
+    no group limit to push down, so its window sorts a full shuffle —
+    exactly the shape the guard above must reject."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    li = catalog.table(spark, SF_SMOKE, "lineitem")
+    df = li.withColumn(
+        "s", F.sum("l_quantity").over(Window.partitionBy("l_orderkey"))
     )
+    plan = _simple_plan(spark, df)
+    assert "WindowGroupLimit" not in plan, plan
+    assert _rank_limit_violation(plan) is not None, plan
 
 
 def test_scatter_passes_wide_frames_through(spark):
@@ -391,7 +426,7 @@ HEADLINE_EXCHANGE_BUDGET = {
     # The 1 is scatter_by(docs, "doc_id")'s small-input repair, whose
     # hashpartitioning the packed-popcount groupBy(doc_id) REUSES (r11:
     # round-robin scatter left a second agg exchange — 2 → 1, measured
-    # 1.9×/1.5× at sf0.1/sf1, scripts/measure_simhash_ab.py). The pin
+    # 1.9×/1.5× at sf0.1/sf1, SIMHASH_AB_r11.json). The pin
     # assumes this suite's environment (local[32] + single-split
     # sf0.001 fixtures keep the scan below defaultParallelism, so the
     # conditional scatter fires); if the fixture layout ever widens,
